@@ -7,8 +7,9 @@ of a checkout.
 Workloads (see WORKLOADS below for their sizes):
 
   batch_mix    closed loop, one client, one query in flight: whole seeded
-               permutations of the reference's batch Q1-Q8, a relational
-               slice and a corpus slice, each forced through the `noop` sink.
+               permutations of the reference's batch Q1, Q4 and Q8, a
+               relational query and a corpus query, each forced through the
+               `noop` sink, one pass per 4 s of --seconds.
   stream_lake  open loop: a feeder process lands one rides chunk per
                interval into q1Tumble, one chunk per micro-batch. A backlog
                then lands at once and is drained. The Q4 retraction pipeline
@@ -56,9 +57,11 @@ RUN_LIMIT_S = 175
 # batch_mix's scale sizes the relational and corpus tables (1.0 = TPC-H SF1).
 # stream_lake's chunk interval keeps the feed within the pipeline's capacity on
 # a 4-core box: p90 latency must stay below it and the backlog must not grow.
+# Its lead-in chunks run back to back in set-up: micro-batch time keeps
+# falling for about the first ten micro-batches while the JIT warms up.
 WORKLOADS = {
     "batch_mix": {"scale": 0.01},
-    "stream_lake": {"interval_ms": 1500, "events_per_chunk": 200, "lead_in": 3, "backlog": 3},
+    "stream_lake": {"interval_ms": 1200, "events_per_chunk": 200, "lead_in": 12, "backlog": 3},
 }
 # a run is invalid when the feeder lands a chunk later than this share of
 # the interval, or when more than this many chunks wait at a landing
@@ -508,7 +511,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
     ap.add_argument("--seed", type=int, default=7452)
-    ap.add_argument("--seconds", type=int, default=12)
+    ap.add_argument("--seconds", type=int, default=15)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--keep", action="store_true", help="keep the run's work directory")
     args = ap.parse_args()
